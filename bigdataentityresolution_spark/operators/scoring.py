@@ -407,6 +407,69 @@ def predict(
     )
 
 
+# fdlibm e_exp.c constants (java.lang.StrictMath.exp, Spark's `exp`)
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_INV_LN2 = 1.44269504088896338700e00
+_EXP_P = (
+    1.66666666666666019037e-01, -2.77777777770155933842e-03,
+    6.61375632143793436117e-05, -1.65339022054652515390e-06,
+    4.13813679705723846039e-08,
+)
+
+
+def strict_exp(x: np.ndarray) -> np.ndarray:
+    """exp(x) bit-identical to java.lang.StrictMath.exp — the fdlibm
+    algorithm Spark's ``exp`` expression evaluates — vectorized in numpy.
+    numpy's and libm's exp differ from it in the last ulp on ~10% of
+    inputs, so a driver-side proba computed with them would not be the
+    value the JVM edge filter compares against the calibrated bars."""
+    x = np.asarray(x, dtype=np.float64)
+    hx = (x.view(np.uint64) >> np.uint64(32)).astype(np.int64) & 0x7FFFFFFF
+    sgn = np.where(x < 0, -1.0, 1.0)
+    mid = (hx > 0x3FD62E42) & (hx < 0x3FF0A2B2)  # 0.5 ln2 < |x| < 1.5 ln2
+    big = hx >= 0x3FF0A2B2
+    k = np.where(mid, sgn, np.where(big, np.trunc(_INV_LN2 * x + 0.5 * sgn), 0.0))
+    with np.errstate(over="ignore", invalid="ignore"):
+        hi = np.where(mid, x - sgn * _LN2_HI, x - k * _LN2_HI)
+        lo = np.where(mid, sgn * _LN2_LO, k * _LN2_LO)
+        r = np.where(mid | big, hi - lo, x)
+        t = r * r
+        p1, p2, p3, p4, p5 = _EXP_P
+        c = r - t * (p1 + t * (p2 + t * (p3 + t * (p4 + t * p5))))
+        y_k0 = 1.0 - ((r * c) / (c - 2.0) - r)
+        y = np.ldexp(1.0 - ((lo - (r * c) / (2.0 - c)) - hi), k.astype(np.int64))
+        out = np.where(k == 0, y_k0, y)
+        out = np.where(hx < 0x3E300000, 1.0 + x, out)  # |x| < 2**-28
+        out = np.where(x > 7.09782712893383973096e02, np.inf, out)
+        out = np.where(x < -7.45133219101941108420e02, 0.0, out)
+    return np.where(np.isnan(x), x, out)
+
+
+def predict_proba(
+    pdf: pd.DataFrame, model: LRModel, feature_cols: tuple[str, ...] = FEATURE_COLS
+) -> np.ndarray:
+    """:func:`proba_expr` on a driver-side frame, bit for bit: the same
+    left-to-right sum and the JVM's exp."""
+    z = np.full(len(pdf), float(model.bias))
+    for wj, c in zip(model.weights, feature_cols):
+        z = z + float(wj) * pdf[c].to_numpy(dtype=np.float64)
+    return 1.0 / (1.0 + strict_exp(-z))
+
+
+def _driver_frame(pairs, cols, limit: int | None = None) -> pd.DataFrame:
+    """The labeled relation as a driver-side pandas frame. A pandas frame
+    passes through; a Spark DataFrame is collected in ONE job — ``cols``
+    cast to double, at most ``limit`` rows — so the Spark forms of the
+    fit and calibrations are a collect plus the same numpy core."""
+    if isinstance(pairs, pd.DataFrame):
+        return pairs
+    df = pairs.select(*[F.col(c).cast("double").alias(c) for c in dict.fromkeys(cols)])
+    if limit is not None:
+        df = df.limit(limit)
+    return df.toPandas()
+
+
 def update_threshold(model: LRModel, n_pos: int, n_neg: int) -> LRModel:
     """Exact logistic_overfit_dataList (src/logistic.c:693-734):
     cumulative fit1/fit0; clamp-then-return at [0.2, 0.8]; rate from the
@@ -530,7 +593,7 @@ def _ridge_penalty(d: int, ridge: float, n_total: int) -> np.ndarray:
 
 
 def fit_lr_newton(
-    pairs: DataFrame,
+    pairs,
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "label",
     max_rounds: int = 8,
@@ -541,19 +604,28 @@ def fit_lr_newton(
 ) -> LRModel:
     """IRLS (Newton) fit — the pipeline's production trainer.
 
+    ``pairs`` is a Spark DataFrame, a driver-side pandas frame, or a
+    list of either (rows concatenated in order; every Spark member is
+    collected). The pipeline fits on the train features it collected
+    once, and refits on ``[that frame, pseudo-labels]`` so only the
+    pseudo-labels are collected here.
+
     Two execution paths, same math:
     - n ≤ driver_fit_max (the common case: labeled pairs are tiny next
-      to the corpus): ONE Arrow toPandas collect, all Newton rounds in
-      local numpy. Removes max_rounds driver-barrier jobs — profiling
-      showed the per-round applyInPandas+collect cycle was the single
-      largest NON-scaling stage of the ER pipeline (13-30 s wall at
-      bench scale regardless of core count, pure scheduling latency).
-      The collected payload is (d+1) float64s per row — 2M pairs ≈ 64 MB.
-    - larger: distributed rounds — an applyInPandas kernel emits
-      per-batch partial gradient + Hessian sums (feature count is tiny,
-      so the Hessian is a (d+1)² matrix — driver-solvable), ONE shuffle
-      per round. Converges in ~5 rounds where the reference's lr=0.6 GD
-      (kept in fit_lr for parity) needs hundreds.
+      to the corpus): ONE Arrow collect, all Newton rounds in local
+      numpy. Removes max_rounds driver-barrier jobs — profiling showed
+      the per-round applyInPandas+collect cycle was the single largest
+      NON-scaling stage of the ER pipeline (13-30 s wall at bench scale
+      regardless of core count, pure scheduling latency). A Spark
+      DataFrame is collected with ``limit(driver_fit_max + 1)``, so the
+      collect is also the size gate. The payload is (d+1) float64s per
+      row — 2M pairs ≈ 64 MB.
+    - a larger Spark DataFrame: distributed rounds — an applyInPandas
+      kernel emits per-batch partial gradient + Hessian sums (feature
+      count is tiny, so the Hessian is a (d+1)² matrix —
+      driver-solvable), ONE shuffle per round. Converges in ~5 rounds
+      where the reference's lr=0.6 GD (kept in fit_lr for parity) needs
+      hundreds.
 
     Threshold bookkeeping matches fit_lr. Regularization (be precise —
     r4 audit): the ridge·n·I penalty (intercept diagonal zeroed, see
@@ -576,25 +648,26 @@ def fit_lr_newton(
     """
     model = model or LRModel(weights=tuple(0.0 for _ in feature_cols))
     d = len(feature_cols)
-    df = pairs.select(
-        *[F.col(c).cast("double").alias(c) for c in feature_cols],
-        F.col(label_col).cast("double").alias("label"),
-    ).cache()
-    n_total = df.count()
-    if n_total == 0:
-        return model
-
-    if driver_fit_max is not None and n_total <= driver_fit_max:
-        pdf = df.toPandas()
-        df.unpersist()
-        x = np.column_stack(
-            [np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64)]
-        )
-        y = pdf["label"].to_numpy(dtype=np.float64)
+    cols = (*feature_cols, label_col)
+    if isinstance(pairs, DataFrame) and driver_fit_max is not None:
+        pdf = _driver_frame(pairs, cols, limit=driver_fit_max + 1)
+        if len(pdf) <= driver_fit_max:
+            pairs = pdf
+    if not isinstance(pairs, DataFrame):
+        frames = [_driver_frame(f, cols) for f in (pairs if isinstance(pairs, list) else [pairs])]
+        y = np.concatenate([f[label_col].to_numpy(dtype=np.float64) for f in frames])
+        if len(y) == 0:
+            return model
+        # column-major like a pandas block: BLAS sums in a layout-dependent
+        # order, so a fixed layout keeps fits reproducible bit for bit
+        x = np.asfortranarray(np.column_stack([np.ones(len(y))] + [
+            np.concatenate([f[c].to_numpy(dtype=np.float64) for f in frames])
+            for c in feature_cols
+        ]))
         n_pos = int((y == 1.0).sum())
         n_neg = int((y == 0.0).sum())
         beta = np.concatenate([[model.bias], model.w()])
-        penalty = _ridge_penalty(d, ridge, n_total)
+        penalty = _ridge_penalty(d, ridge, len(y))
         for _ in range(max_rounds):
             p = 1.0 / (1.0 + np.exp(-(x @ beta)))
             g = x.T @ (p - y)
@@ -612,6 +685,13 @@ def fit_lr_newton(
                 break
         return model
 
+    df = pairs.select(
+        *[F.col(c).cast("double").alias(c) for c in feature_cols],
+        F.col(label_col).cast("double").alias("label"),
+    ).cache()
+    n_total = df.count()
+    if n_total == 0:
+        return model
     label_counts = {
         int(r["label"]): r["n"]
         for r in df.groupBy("label").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -673,7 +753,7 @@ def fit_lr_newton(
 
 
 def calibrate_edge_threshold(
-    labeled_pairs: DataFrame,
+    labeled_pairs,
     model: LRModel,
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "label",
@@ -695,17 +775,15 @@ def calibrate_edge_threshold(
     edge floors).
 
     Driver-local by design: labeled pairs are the small relation of the
-    problem (same size gate as the IRLS driver path). Falls back to
-    model.threshold when the labels are single-class.
+    problem (same size gate as the IRLS driver path). ``labeled_pairs``
+    is a pandas frame or a Spark DataFrame (collected, at most
+    ``driver_max`` rows); the probabilities are :func:`predict_proba`'s,
+    bit-identical to the JVM ``predict`` the edge filter evaluates.
+    Falls back to model.threshold when the labels are single-class.
     """
-    pdf = (
-        predict(labeled_pairs, model, feature_cols)
-        .select(F.col("proba"), F.col(label_col).cast("double").alias("label"))
-        .limit(driver_max)
-        .toPandas()
-    )
-    y = pdf["label"].to_numpy(dtype=np.float64)
-    p = pdf["proba"].to_numpy(dtype=np.float64)
+    pdf = _driver_frame(labeled_pairs, (*feature_cols, label_col), limit=driver_max)
+    y = pdf[label_col].to_numpy(dtype=np.float64)
+    p = predict_proba(pdf, model, feature_cols)
     n_pos = float((y == 1.0).sum())
     if n_pos == 0 or n_pos == len(y):
         return model.threshold
@@ -724,7 +802,7 @@ def calibrate_edge_threshold(
 
 
 def calibrate_override_bar(
-    labeled_pairs: DataFrame,
+    labeled_pairs,
     model: LRModel,
     jaccard_min: float,
     cosine_min: float,
@@ -781,8 +859,9 @@ def calibrate_override_bar(
     negative sample can still under-represent the corpus's negative
     shapes.
 
-    Driver-local like calibrate_edge_threshold: labeled pairs are the
-    problem's small relation.
+    Driver-local like calibrate_edge_threshold, with the same inputs:
+    a pandas frame, or a Spark DataFrame collected (at most
+    ``driver_max`` rows) before the region filter.
 
     ``cosine_exempt_empty``: the default region matches the edge
     policy's vocab-empty exemption (a pair with an empty TF-IDF
@@ -792,20 +871,18 @@ def calibrate_override_bar(
     definition and their (numerous, low-proba) labeled negatives must
     not dilute the in-region evidence.
     """
-    cos_ok = F.col("f_cosine") >= F.lit(float(cosine_min))
-    if cosine_exempt_empty:
-        cos_ok = cos_ok | (F.col("f_cosine") == 0)
-    relaxed = (F.col("f_jaccard") >= F.lit(float(jaccard_min))) & cos_ok
-    pdf = (
-        predict(labeled_pairs, model, feature_cols)
-        .filter((F.col(label_col) == 0) & relaxed)
-        .select("proba")
-        .limit(driver_max)
-        .toPandas()
+    pdf = _driver_frame(
+        labeled_pairs, (*feature_cols, "f_cosine", "f_jaccard", label_col), limit=driver_max
     )
-    if len(pdf) < int(min_n):
+    cos = pdf["f_cosine"].to_numpy(dtype=np.float64)
+    cos_ok = cos >= float(cosine_min)
+    if cosine_exempt_empty:
+        cos_ok = cos_ok | (cos == 0)
+    relaxed = (pdf["f_jaccard"].to_numpy(dtype=np.float64) >= float(jaccard_min)) & cos_ok
+    in_region = (pdf[label_col].to_numpy(dtype=np.float64) == 0) & relaxed
+    if int(in_region.sum()) < int(min_n):
         return float(cap)
-    worst = float(pdf["proba"].max())
+    worst = float(predict_proba(pdf, model, feature_cols)[in_region].max())
     # Headroom rule (r4): the bar must stand clear of the worst labeled
     # negative by at least half its remaining distance to certainty, not
     # a flat 0.02. A labeled-negative max is an n-sample extreme — the

@@ -116,7 +116,10 @@ def er_vocab(
        cosine floor. Guard: if the prune leaves fewer than
        ``min_vocab_after_prune`` terms (a corpus whose whole vocabulary
        is common — e.g. tiny fixtures), fall back to the unpruned
-       ranking rather than emptying every vector.
+       ranking rather than emptying every vector. The guard is part of
+       the plan, not a driver barrier: a one-row survivor count is
+       broadcast-joined onto every term, so no separate driver-side
+       query over the vocab aggregate runs before the stage's own.
 
     2. The CALLER passes an auto-scaled ``k`` (see ERConfig.vocab_k):
        a fixed top-1000 over a 40k-file corpus keeps only the most
@@ -128,12 +131,13 @@ def er_vocab(
        feature hashing (no vocab state at all) rather than raising k.
     """
     if max_df_ratio is not None:
-        pruned = vocab_df.filter(
-            F.col("df") <= F.lit(float(max_df_ratio) * float(n_docs))
+        keep = F.col("df") <= F.lit(float(max_df_ratio) * float(n_docs))
+        n_keep = vocab_df.agg(F.count_if(keep).alias("_n_keep"))
+        vocab_df = (
+            vocab_df.crossJoin(F.broadcast(n_keep))
+            .filter(keep | (F.col("_n_keep") < F.lit(int(min_vocab_after_prune))))
+            .drop("_n_keep")
         )
-        # cheap driver-side guard: the pruned vocab is tiny by definition
-        if pruned.limit(min_vocab_after_prune).count() >= min_vocab_after_prune:
-            vocab_df = pruned
     return top_k_vocab(vocab_df, k)
 
 

@@ -83,8 +83,9 @@ class ERConfig:
     # now surfaces. Measured on the HARD tier: 540 true pairs died at
     # the 0.2 prefilter; lowering it (with the matching override floor)
     # is worth ~3 recall points at unchanged precision — the calibrated
-    # override bar, not this filter, is the precision defense.
-    sig_prefilter: float = 0.12
+    # override bar, not this filter, is the precision defense. None
+    # featurizes every lexical candidate.
+    sig_prefilter: float | None = 0.12
     newton_rounds: int = 5  # IRLS is quadratic — 5 rounds reach |step| < 1e-4
     self_train: bool = True
     self_train_limit_factor: int = 12  # pairs_limit = train_size × 12 (src/functs.c:23)
@@ -231,58 +232,6 @@ def verify_content_invariant(source: DataFrame, staged: DataFrame, id_col: str =
     )
 
 
-def build_prep_for_docs(
-    files: DataFrame,
-    sigs: DataFrame,
-    top_vocab: DataFrame,
-    doc_ids: DataFrame,
-    n_docs: int,
-    lev_bound: int,
-    tokenizer=None,
-    tf_mode: str = "log",
-) -> DataFrame:
-    """Compact per-doc pair-join state (prefix + int-keyed TF-IDF vector +
-    MinHash sig) for ONLY the docs in ``doc_ids`` (one spec_id column).
-
-    Bit-identical per doc to the full-corpus prep stage: per-doc state is
-    a pure function of (the doc's own tokens, the SHARED top-k
-    vocabulary, n_docs, the doc's prefix and signature) — re-tokenizing
-    the selected docs produces exactly the postings rows a filter of the
-    corpus-wide postings would, so restricting files/sigs with broadcast
-    semi-joins on the id set changes nothing about the values — only how
-    much work materializing them costs. Used by the training path so
-    featurizing a few thousand labeled pairs never waits on (or
-    shuffles) corpus-scale state.
-    """
-    ids = doc_ids.select("spec_id")
-    # Re-tokenize ONLY the selected docs instead of semi-joining the
-    # corpus-wide postings relation: postings is |corpus-tokens| rows, so
-    # even a broadcast semi-join over it costs full passes (measured: the
-    # concurrent train chain spent ~2 postings-cache scans here and
-    # became the pipeline tail at 8 cores). A broadcast semi-join on the
-    # files table + an explode of the few thousand selected docs is a
-    # fraction of one postings pass — and on a real table the semi-join
-    # pushes into the scan (DPP/bloom), which a pass over a materialized
-    # corpus-wide postings cache never can.
-    files_t = files.join(F.broadcast(ids), "spec_id", "left_semi")
-    p_t = TI.postings(
-        files_t, id_col="spec_id", text_col="content", tokenizer=tokenizer
-    )
-    vecs = TI.doc_vectors_indexed(p_t, top_vocab, n_docs, tf_mode=tf_mode).withColumnRenamed(
-        "doc_id", "spec_id"
-    )
-    empty_map = F.map_from_arrays(
-        F.array().cast("array<int>"), F.array().cast("array<float>")
-    )
-    return (
-        files.join(F.broadcast(ids), "spec_id", "left_semi")
-        .select("spec_id", F.substring("content", 1, lev_bound).alias("prefix"))
-        .join(vecs, "spec_id", "left")
-        .withColumn("features", F.coalesce("features", empty_map))
-        .join(sigs.join(F.broadcast(ids), "spec_id", "left_semi"), "spec_id")
-    )
-
-
 def _phase_logger():
     """SPARK_GRAFT_PHASE_LOG=1 → timestamped phase lines on stderr.
     The decomposition tool behind the scaling work: wall attribution of
@@ -337,12 +286,10 @@ def run_er_pipeline(
         fp_files,
     )
 
-    # ---- stage: top-k vocabulary (tiny; shared by BOTH prep paths) ---------
-    # Materialized as its own stage because the early train-prep path
-    # (see train_features) must use the BIT-IDENTICAL vocabulary rows the
-    # full corpus prep uses — term indices come from a row_number over
-    # this relation, so sharing one cached/checkpointed DataFrame removes
-    # any tie-ordering doubt and computes the corpus-wide vocab agg once.
+    # ---- stage: top-k vocabulary (tiny) ------------------------------------
+    # Materialized as its own stage: term indices come from a row_number
+    # over this relation, so one cached/checkpointed DataFrame computes
+    # the corpus-wide vocab agg and the index assignment once.
     n_docs = files.count()
     vocab_k = (
         min(max(1000, n_docs), 1_000_000)
@@ -351,8 +298,7 @@ def run_er_pipeline(
     )
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature, so it must run ONCE here
-    # (cached/checkpointed) — both prep paths then reuse it instead of
-    # re-deriving the window per path (measured ~1-2 s each at bench
+    # (cached/checkpointed; measured ~1-2 s per derivation at bench
     # scale, and at production vocab sizes the single-partition sort is
     # exactly the stage to never repeat).
     top_vocab = runner.run(
@@ -461,22 +407,13 @@ def run_er_pipeline(
 
     # ---- stage: training pairs + features ----------------------------------
     # Train on the train split's labeled pairs (reference: LR trains on
-    # pairs among first-60% specs, src/main.c:296-308).
-    #
-    # The train features come from a FILTERED prep — the per-doc compact
-    # state (prefix + TF-IDF vector + sig) built ONLY for the docs the
-    # labeled pairs touch, via broadcast semi-joins on the tiny train-doc
-    # id set. Per-doc state is a pure function of (that doc's postings,
-    # the shared corpus vocabulary, the doc's prefix, the doc's sig), so
-    # the features are bit-identical to a join against the full corpus
-    # prep (tests/test_pipeline.py asserts this) — but the train+fit
-    # chain no longer waits for the corpus-wide prep to materialize: it
-    # forks right after the postings/vocab stages and the driver-local
-    # IRLS fit runs CONCURRENTLY with the heavy docs_prep job instead of
-    # serially after it (measured: the fit added ~5 s of pure critical
-    # path at 16 cores). At production scale the same property matters
-    # more: training on a few thousand labeled pairs must not gate on
-    # featurizing 10^12 docs.
+    # pairs among first-60% specs, src/main.c:296-308), featurized
+    # against docs_prep — the same per-doc state (prefix + TF-IDF vector
+    # + sig) the candidates join, so the train path never re-tokenizes
+    # (tests/test_pipeline.py asserts the row-for-row equality). The
+    # labeled relation is tiny next to the corpus, so the pipeline
+    # collects it ONCE (run_train_and_fit) and the fit, the self-train
+    # refit and every calibration run in driver numpy on that frame.
     def train_features():
         lp = labeled_pairs
         if "split" not in lp.columns:
@@ -493,19 +430,9 @@ def run_er_pipeline(
             F.greatest("left_spec_id", "right_spec_id").alias("b"),
             "label",
         ).distinct()
-        train_prep = build_prep_for_docs(
-            files, sigs, top_vocab,
-            doc_ids=tp.select(F.col("a").alias("spec_id")).unionByName(
-                tp.select(F.col("b").alias("spec_id"))
-            ).distinct(),
-            n_docs=n_docs,
-            lev_bound=config.lev_bound,
-            tokenizer=tok,
-            tf_mode=config.tf_mode,
-        )
         # no prefilter: every labeled pair must be featurized
         return S.pair_features_compact(
-            tp, train_prep, num_perm=config.num_perm,
+            tp, docs_prep, num_perm=config.num_perm,
             lev_bound=config.lev_bound, sig_prefilter=None,
         ).select("a", "b", "label", *S.FEATURE_COLS)
 
@@ -513,15 +440,15 @@ def run_er_pipeline(
     # Three independent groups:
     #   A) label-closure CC (labeled pairs only — NOT on the final-label
     #      critical path; its output feeds the result dict and sinks)
-    #   B) prep → train features + IRLS fit (labeled pairs × docs_prep)
+    #   B) train features + IRLS fit (labeled pairs × docs_prep)
     #   C) candidate generation (signatures only)
     # Dependency-precise forking (r2 event-log finding: group C waited
     # behind the 20 s prep materialization it does not read — candidates
     # depend on `sigs` alone, so only the signature cache is materialized
-    # before C forks; the B chain continues on the main thread). Each
-    # shared cached stage is materialized exactly once before any
-    # dependent forks — concurrent first-touch of an unmaterialized
-    # cache would race block computation.
+    # before C forks; docs_prep then materializes on the main thread and
+    # B forks right after it). Each shared cached stage is materialized
+    # exactly once before any dependent forks — concurrent first-touch of
+    # an unmaterialized cache would race block computation.
     def run_closure():
         plog("closure: start")
         out = runner.run("closure", closure, fp_labels)
@@ -529,12 +456,17 @@ def run_er_pipeline(
         return out
 
     def run_train_and_fit():
-        plog("train_features: DAG build start")
-        tp = runner.run("train_features", train_features, fp_labels).cache()
-        plog("train_features: DAG built, materializing")
-        model = S.fit_lr_newton(tp, max_rounds=config.newton_rounds)
+        tp = runner.run("train_features", train_features, fp_labels)
+        # the ONE collect of the labeled relation: fit, refit and
+        # calibrations all read this frame. It runs before .cache(), so a
+        # checkpointed stage is read straight from its parquet here and
+        # train_pairs' first Spark reader (the refit's known-pair
+        # anti-join) builds the cache.
+        train_pdf = tp.toPandas()
+        plog("train_features: collected")
+        model = S.fit_lr_newton(train_pdf, max_rounds=config.newton_rounds)
         plog("fit: done")
-        return tp, model
+        return tp.cache(), train_pdf, model
 
     def in_pool(name: str, fn):
         """Tag a job group's thread with its own FAIR scheduler pool
@@ -568,9 +500,13 @@ def run_er_pipeline(
             # (measured: filtering after the union cost ~1 full pair
             # shuffle of mostly-dead rows). est_j is a pure function of
             # the pair, so max() is a no-op on duplicates.
+            lexical = candidates
+            if config.sig_prefilter is not None:
+                lexical = lexical.filter(
+                    F.col("est_j") >= F.lit(float(config.sig_prefilter))
+                )
             cand = (
-                candidates.filter(F.col("est_j") >= F.lit(float(config.sig_prefilter)))
-                .unionByName(sem_candidates)
+                lexical.unionByName(sem_candidates)
                 .groupBy("a", "b")
                 .agg(F.max("est_j").alias("est_j"))
             )
@@ -583,7 +519,10 @@ def run_er_pipeline(
             lev_bound=config.lev_bound, sig_prefilter=config.sig_prefilter,
         ).select("a", "b", *S.FEATURE_COLS, "f_vocab_cov")
 
-    cand_feats = runner.run("cand_features", cand_features, fp_files).cache()
+    # no extra .cache(): runner.run caches it in cache mode, and in workdir
+    # mode its readers scan the stage parquet (an in-memory copy of that
+    # read cost one more pass to build and was never released)
+    cand_feats = runner.run("cand_features", cand_features, fp_files)
 
     if config.overlap_jobs:
         from concurrent.futures import ThreadPoolExecutor
@@ -594,32 +533,27 @@ def run_er_pipeline(
             sigs.count()  # the one dependency group C reads
             plog("sigs.count: done; forking candidates")
             cand_future = pool.submit(in_pool("candidates", candidates.count))
-            # Group B's SHARED inputs (postings + top-k vocab) materialize
-            # once on the main thread, then train+fit forks IMMEDIATELY —
-            # its filtered prep reads only vocab/sigs/files (it
-            # re-tokenizes the few thousand train docs), so the
-            # driver-local IRLS fit overlaps the heavy corpus-wide
-            # docs_prep materialization instead of serially following it.
-            postings_df.count()
-            top_vocab.count()
-            plog("postings+vocab: done; forking train+fit")
+            # docs_prep (and the postings/vocab stages under it) is group
+            # B's only corpus-side input, so train+fit forks right after it
+            # and the driver-local IRLS fit overlaps the candidate features.
+            docs_prep.count()
+            plog("docs_prep.count: done; forking train+fit")
             fit_future = pool.submit(in_pool("train", run_train_and_fit))
-            docs_prep.count()  # the final-labeling path's heavy dependency
-            plog("docs_prep.count: done")
             cand_future.result()  # candidates cache materialized (no
             plog("candidates.count: joined")  # first-touch race below)
             candfeat_future = pool.submit(
                 in_pool("candfeat", cand_feats.count)
             )
-            train_pairs, model = fit_future.result()
+            train_pairs, train_pdf, model = fit_future.result()
             plog("train+fit: joined")
-            candfeat_future.result()
+            n_cand = candfeat_future.result()
             plog("cand_features: materialized")
             closure_raw = closure_future.result()
             plog("closure: joined")
     else:
         closure_raw = run_closure()
-        train_pairs, model = run_train_and_fit()
+        train_pairs, train_pdf, model = run_train_and_fit()
+        n_cand = cand_feats.count()
 
     closure_df = closure_raw.cache()
     label_clusters = closure_df.filter(F.col("_kind") == "label").drop("_kind")
@@ -633,18 +567,17 @@ def run_er_pipeline(
 
     # ---- stage: one self-training round (count_retrain < 1, src/functs.c:1717)
     if config.self_train:
-        train_size = train_pairs.count()
-        plog("self_train: train_size counted")
+        limit = config.self_train_limit_factor * max(len(train_pdf), 1)
         pseudo = S.self_training_pseudo_labels(
             scored,
             known_pairs=train_pairs.select("a", "b"),
-            limit=config.self_train_limit_factor * max(train_size, 1),
-        ).select("a", "b", "label", *S.FEATURE_COLS)
-        plog("self_train: pseudo DAG built")
-        refit_input = train_pairs.select("a", "b", "label", *S.FEATURE_COLS).unionByName(
-            pseudo
-        )
-        model = S.fit_lr_newton(refit_input, max_rounds=config.newton_rounds)
+            # the cap can only bind when more pairs were scored than it
+            # admits; otherwise skip its count barrier
+            limit=limit if n_cand > limit else None,
+        ).select("label", *S.FEATURE_COLS)
+        # the pseudo-labels are collected inside the refit and appended
+        # after the train rows, the row order of a train ∪ pseudo union
+        model = S.fit_lr_newton([train_pdf, pseudo], max_rounds=config.newton_rounds)
         plog("self_train: refit done")
         scored = S.predict(cand_feats, model)
 
@@ -656,9 +589,7 @@ def run_er_pipeline(
     if config.edge_threshold == "auto":
         # calibrated on the TRUE labeled pairs (never on pseudo-labels),
         # after the self-train refit if one ran
-        thr = S.calibrate_edge_threshold(
-            train_pairs.select("label", *S.FEATURE_COLS), model
-        )
+        thr = S.calibrate_edge_threshold(train_pdf, model)
         plog(f"edge threshold calibrated: {thr:.4f} (model.threshold {model.threshold:.4f})")
     elif config.edge_threshold is not None:
         thr = float(config.edge_threshold)
@@ -667,7 +598,7 @@ def run_er_pipeline(
 
     if config.edge_high_conf_override == "auto":
         override_bar = S.calibrate_override_bar(
-            train_pairs.select("label", *S.FEATURE_COLS),
+            train_pdf,
             model,
             jaccard_min=config.edge_override_jaccard_min,
             cosine_min=config.edge_override_cosine_min,
@@ -692,7 +623,7 @@ def run_er_pipeline(
     if config.semantic_channel and config.edge_semantic_override is not None:
         if config.edge_semantic_override == "auto":
             sem_bar = S.calibrate_override_bar(
-                train_pairs.select("label", *S.FEATURE_COLS),
+                train_pdf,
                 model,
                 jaccard_min=0.0,
                 cosine_min=config.edge_semantic_cosine_min,

@@ -56,3 +56,16 @@ def test_latest_committed_bench_carries_quality_keys():
     assert {"er_hard", "hotkey_capped", "hotkey_salted"} <= set(prior), (
         f"latest BENCH_r*.json queries missing quality keys: {sorted(prior)}"
     )
+
+
+def test_hard_recall_by_kind_rejects_mixed_kind_truth(spark):
+    """The kind-homogeneity guard is an exception, not an assert, so it
+    still fires under ``python -O``."""
+    import pytest
+
+    truth = spark.createDataFrame(
+        [("r//src/hard/a.py@c", 1), ("r//src/orphan/b.py@c", 1)],
+        "spec_id string, cluster_id bigint",
+    )
+    with pytest.raises(ValueError, match="mixed-kind"):
+        bench._hard_recall_by_kind(truth, truth)

@@ -112,6 +112,20 @@ def test_fit_lr_newton_distributed_matches_driver_local(spark, separable):
     assert m_dist.rounds_trained > 0
 
 
+def test_fit_lr_newton_frame_and_dataframe_agree(spark, separable):
+    """One numpy core behind every input form: a Spark DataFrame is
+    collected and fitted exactly like the already-collected pandas
+    frame, and a list of frames fits like their concatenation (the
+    pipeline's refit passes [collected train frame, Spark pseudo-labels])."""
+    df, x, y = separable
+    pdf = df.toPandas()
+    m_pdf = S.fit_lr_newton(pdf, max_rounds=6)
+    assert S.fit_lr_newton(df, max_rounds=6) == m_pdf
+    rest = spark.createDataFrame(pdf.iloc[250:], df.schema)
+    assert S.fit_lr_newton([pdf.iloc[:250], rest], max_rounds=6) == m_pdf
+    assert m_pdf.rounds_trained > 0
+
+
 def np_irls(x, y, rounds=5, ridge=1e-3, tol=1e-4):
     """NumPy replica of fit_lr_newton's math (intercept unpenalized,
     n-scaled ridge, Newton steps, |step|<tol stop) incl. threshold."""
@@ -363,3 +377,59 @@ def test_calibrate_override_bar_with_evidence(spark):
     worst = 1 / (1 + np.exp(-(4.0 * 0.5 + 4.0 * 0.3)))
     headroom = max(0.02, 0.5 * (1.0 - worst))
     assert abs(bar - min(max(worst + headroom, 0.8), 0.99)) < 1e-9
+
+
+def test_driver_proba_is_bit_identical_to_jvm_predict(spark):
+    """The calibrations compute probabilities in driver numpy; they must
+    be the exact doubles the JVM predict() expression gives the edge
+    filter. numpy's own exp differs from Spark's (StrictMath) in the
+    last ulp on ~10% of inputs, hence strict_exp."""
+    rng = np.random.default_rng(3)
+    z = np.concatenate([
+        rng.uniform(-40.0, 40.0, 20000),
+        rng.uniform(-1.2, 1.2, 5000),  # both reduction branches near ln2
+        [0.0, -0.0, 1e-12, -1e-300, 709.0, 710.0, -745.0, -746.0],
+    ])
+    jvm = (
+        spark.createDataFrame([(float(v),) for v in z], "z double")
+        .select("z", F.exp("z").alias("e"))
+        .toPandas()
+    )
+    assert np.array_equal(S.strict_exp(jvm["z"].to_numpy()), jvm["e"].to_numpy())
+
+    rows = [
+        (int(rng.random() < 0.4), *map(float, rng.uniform(0.0, 1.0, 3)))
+        for _ in range(5000)
+    ]
+    m = S.LRModel(weights=(2.8986135567053473, 6.9335483301176275, 4.883193069177317),
+                  bias=-6.400824640893923)
+    scored = S.predict(_pairs_df(spark, rows), m).toPandas()
+    assert np.array_equal(S.predict_proba(scored, m), scored["proba"].to_numpy())
+
+
+def test_calibrations_agree_on_frame_and_dataframe(spark):
+    """Each calibration returns the same float from the collected frame
+    as from the Spark DataFrame, on data where every rule is live: a
+    mixed-label threshold sweep, and override regions holding >= min_n
+    labeled negatives so the bar lands strictly between floor and cap."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for _ in range(1200):
+        label = int(rng.random() < 0.45)
+        lo, hi = (0.3, 1.0) if label else (0.0, 0.6)
+        rows.append((label, *map(float, rng.uniform(lo, hi, 3))))
+    rows += [(0, 0.0, 0.5, 0.5)] * 5  # vocab-empty negatives (cosine 0)
+    df = _pairs_df(spark, rows)
+    pdf = df.toPandas()
+    m = S.LRModel(weights=(2.0, 1.5, 1.0), bias=-1.5, threshold=0.5)
+
+    thr = S.calibrate_edge_threshold(df, m)
+    assert thr == S.calibrate_edge_threshold(pdf, m)
+    assert thr != m.threshold
+    for kw in (
+        {"jaccard_min": 0.2, "cosine_min": 0.35},
+        {"jaccard_min": 0.0, "cosine_min": 0.35, "cosine_exempt_empty": False},
+    ):
+        bar = S.calibrate_override_bar(df, m, **kw)
+        assert bar == S.calibrate_override_bar(pdf, m, **kw)
+        assert 0.8 < bar < 0.99, (kw, bar)

@@ -87,3 +87,57 @@ def test_doc_vectors_pruned_to_vocab(spark, docs_df):
         assert set(r["features"]).issubset(kept_terms)
         for t, w in r["features"].items():
             assert w > 0
+
+
+def _er_vocab_driver_rule(vocab_df, n_docs, k, max_df_ratio, min_vocab_after_prune):
+    """er_vocab's fallback guard as a driver-side barrier: prune only when
+    at least ``min_vocab_after_prune`` terms survive the max-df filter."""
+    from pyspark.sql import functions as F
+
+    pruned = vocab_df.filter(F.col("df") <= F.lit(float(max_df_ratio) * float(n_docs)))
+    if pruned.limit(min_vocab_after_prune).count() >= min_vocab_after_prune:
+        vocab_df = pruned
+    return TI.top_k_vocab(vocab_df, k)
+
+
+def test_er_vocab_prune_guard_both_branches(spark, docs_df):
+    """At max_df_ratio 0.3 of 4 docs, the 9 single-doc terms survive the
+    prune and 'spark', 'join', 'filter' (2 docs each) do not. With
+    min_vocab_after_prune 9 the pruned ranking is kept; with 10 the
+    guard falls back to the unpruned one."""
+    n = len(DOCS)
+    v = TI.vocab(TI.postings(docs_df), n)
+    common = {"spark", "join", "filter"}
+    for min_keep, expect_pruned in ((9, True), (10, False)):
+        got = [r["term"] for r in TI.er_vocab(v, n, 100, 0.3, min_keep).collect()]
+        assert (not common & set(got)) == expect_pruned, (min_keep, got)
+        assert len(got) == (9 if expect_pruned else 12)
+        ref = _er_vocab_driver_rule(v, n, 100, 0.3, min_keep)
+        assert got == [r["term"] for r in ref.collect()]
+
+
+def test_er_vocab_matches_driver_rule_on_tiny_corpus(spark, tiny_tables):
+    """The in-plan guard ranks the same terms in the same order as the
+    driver-side rule, on the pipeline's default prune (taken) and with
+    an unreachable survivor minimum (fallback)."""
+    from bigdataentityresolution_spark.functions.text import tokenize
+
+    files_df, _, _ = tiny_tables
+    n = files_df.count()
+    p = TI.postings(
+        files_df, id_col="spec_id", text_col="content", tokenizer=tokenize("content")
+    ).cache()
+    v = TI.vocab(p, n)
+    ranked = {}
+    for min_keep in (200, 10**9):
+        got = [(r["term"], r["df"]) for r in TI.er_vocab(v, n, 1000, 0.35, min_keep).collect()]
+        ref = [
+            (r["term"], r["df"])
+            for r in _er_vocab_driver_rule(v, n, 1000, 0.35, min_keep).collect()
+        ]
+        assert got == ref
+        ranked[min_keep] = got
+    p.unpersist()
+    # the two branches really differ here: the default prune is taken
+    assert max(df for _, df in ranked[200]) <= 0.35 * n
+    assert max(df for _, df in ranked[10**9]) > 0.35 * n
